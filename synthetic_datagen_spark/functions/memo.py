@@ -30,8 +30,9 @@ def app_scoped_memo(
     key = (app_id, cache_key)
     if key in cache:
         return cache[key]
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
+    # snapshot + pop: threads of one pool may miss on the same cache at once
+    for k in [k for k in list(cache) if k[0] != app_id]:
+        cache.pop(k, None)
     val = build()
     cache[key] = val
     return val

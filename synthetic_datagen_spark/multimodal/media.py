@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources import Catalog
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -88,7 +90,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the media table from documents.parquet: payload = utf-8
     bytes of the text, modality round-robin by doc_id, typed metadata
     derived deterministically from the id. All JVM-side expressions."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = Catalog(spark, sf_dir).table("documents")
     modality = F.element_at(
         F.array(*[F.lit(m) for m in _MODALITIES]),
         (F.col("doc_id") % 3 + 1).cast("int"),

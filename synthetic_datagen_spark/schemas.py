@@ -1,8 +1,16 @@
-"""Explicit schemas for every table the engine reads.
+"""Schemas of the relations the engine reads.
 
-At 100 TB you never ``inferSchema`` — a typed read is both correct and
-lets the Parquet vectorized reader prune columns. The reference likewise
-validates its schema at load (reference: app/data_processor.py:19-24).
+``TYPICAL_PRICE`` is a read schema: the CSV loaders pass it so a CSV scan
+never ``inferSchema``s, as the reference validates its schema at load
+(reference: app/data_processor.py:19-24).
+
+``TABLES`` is the table/column catalogue of the parquet star schema —
+which tables exist and their columns, in file order — not the read
+schema. Catalog reads use the schema Spark infers from each file's footer
+(resolved once per session, sources/registry.py), because timestamp
+types depend on session confs: under ``get_spark`` the tz-less
+``orders``/``lineitem``/``events`` timestamps infer as ``timestamp_ntz``
+where ``TABLES`` says ``timestamp``.
 """
 
 from __future__ import annotations

@@ -5,16 +5,60 @@ S2  multi-CSV union + sort + dedup       (reference: app/data_processor.py:27-34
 S3  CSV sink                             (reference: app/data_processor.py:37-39)
 S10 Parquet catalog over the testdata star schema.
 
-Every reader takes an explicit schema — at 100 TB `inferSchema` means a
-full extra pass over the data; a typed read also lets Catalyst prune
-columns down to the Parquet scan.
+The CSV readers take an explicit schema — `inferSchema` on CSV means a
+full extra pass over the data. Catalog reads resolve each parquet file's
+footer schema once per session (the schema Spark itself infers, memoized
+on the file's identity and the confs that change inference) and pass it
+back to every later read, so a repeated `table()` launches no
+schema-inference job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import os
 
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+from ..functions.memo import app_scoped_memo
 from ..schemas import BROADCASTABLE, TABLES, TYPICAL_PRICE
+
+# Session confs that change the schema Spark infers from a parquet
+# footer. Part of the memo key: __spark_entry__ flips two of them inside
+# a session that already read the same files under other values.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_SCHEMA_MEMO: dict = {}
+
+
+def _file_identity(path: str) -> tuple:
+    """(path, mtime_ns, size) of a file, or the sorted such triples of a
+    directory's data files (Spark skips names starting with ``_``/``.``)."""
+    path = os.path.abspath(path)
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (path, st.st_mtime_ns, st.st_size)
+    files = []
+    for root, _, names in os.walk(path):
+        for n in names:
+            if not n.startswith(("_", ".")):
+                st = os.stat(f := os.path.join(root, n))
+                files.append((f, st.st_mtime_ns, st.st_size))
+    return tuple(sorted(files))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    session for each file identity and inference-conf combination."""
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return app_scoped_memo(
+        _SCHEMA_MEMO, spark, (_file_identity(path), confs),
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 class Catalog:
@@ -33,7 +77,8 @@ class Catalog:
     def table(self, name: str) -> DataFrame:
         if name not in TABLES:
             raise KeyError(f"unknown table {name!r}; known: {sorted(TABLES)}")
-        df = self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+        path = f"{self.sf_dir}/{name}.parquet"
+        df = self.spark.read.schema(parquet_schema(self.spark, path)).parquet(path)
         # events.ts arrives in one of three physical forms depending on how
         # the parquet was written and which session flags are set:
         #   * ns-bigint (spark.sql.legacy.parquet.nanosAsLong) — exact us
